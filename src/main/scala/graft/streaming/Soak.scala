@@ -79,6 +79,15 @@ object Soak {
     concat_ws(" ",
       (0 until 12).map(i => pmod(seed * (31 + i) + i + 1, lit(9973)).cast("string")): _*)
 
+  /** The synthetic 64-d corpus vectors with ids in [lo, hi) — slices of one
+    * corpus, for soaks that build an index and then fragment it with
+    * appends. */
+  private def synthVecs(spark: SparkSession, lo: Int, hi: Int) =
+    spark.range(lo.toLong, hi.toLong)
+      .select(col("id").as("vec_id"),
+        expr("transform(sequence(0, 63), j -> cast(pmod(id * 31 + j * 17, 997) / 997.0 as float))")
+          .as("embedding"))
+
   /** Streaming incremental dedup against the persisted standing indexes —
     * the ingest loop's throughput number. Synthesizes a standing corpus,
     * persists its band index AND exact-hash index bucketed (builds
@@ -373,20 +382,17 @@ object Soak {
   def annCompactRun(spark: SparkSession, corpusVecs: Int, queriesRate: Int,
       tag: String, soakMs: Long = 20000): Result = {
     import graft.operators.Similarity
-    def vecs(lo: Int, hi: Int) =
-      spark.range(lo.toLong, hi.toLong)
-        .select(col("id").as("vec_id"),
-          expr("transform(sequence(0, 63), j -> cast(pmod(id * 31 + j * 17, 997) / 997.0 as float))")
-            .as("embedding"))
     val path =
       s"${graft.util.TmpDirs.perProcessDir("graft_soak_anncompact")}/$tag"
     // build on the first quarter, fragment with six frozen-center appends
     Similarity.writeIvfIndex(
-      Similarity.buildIvfIndex(vecs(0, corpusVecs / 4), nlist = 64), path)
+      Similarity.buildIvfIndex(synthVecs(spark, 0, corpusVecs / 4), nlist = 64),
+      path)
     val slice = corpusVecs / 8
     (0 until 6).foreach { b =>
       Similarity.appendToIvfIndex(
-        vecs(corpusVecs / 4 + b * slice, corpusVecs / 4 + (b + 1) * slice),
+        synthVecs(spark, corpusVecs / 4 + b * slice,
+          corpusVecs / 4 + (b + 1) * slice),
         path)
     }
     val queries = spark.readStream.format("rate")
@@ -658,8 +664,10 @@ object Soak {
     * the ceiling, while [[AnnStream.ivfSearchQuery]] keeps serving
     * queries through every rewrite window (per-trigger listings + the
     * retry-once contract — no re-prepare needed, centers are untouched).
-    * The ceiling (3× the per-cell floor) makes compaction fire every few
-    * triggers — the routine cadence a real ingest runs at, priced here.
+    * The index starts fragmented on purpose (one build plus four appends,
+    * more files than the ceiling), so the first trigger compacts; the
+    * ceiling (4× the 64-cell floor) then re-fires every few triggers —
+    * the routine cadence a real ingest runs at, priced here.
     *
     * Returns (ingest result, serving result, compactions fired). The run
     * itself REQUIRES ≥1 automatic compaction, zero duplicate appended
@@ -669,15 +677,22 @@ object Soak {
       vecsRate: Int, queriesRate: Int, tag: String,
       soakMs: Long = 20000): (Result, Result, Long) = {
     import graft.operators.Similarity
-    val corpus = spark.range(corpusVecs.toLong)
-      .select(col("id").as("vec_id"),
-        expr("transform(sequence(0, 63), j -> cast(pmod(id * 31 + j * 17, 997) / 997.0 as float))")
-          .as("embedding"))
     val root =
       s"${graft.util.TmpDirs.perProcessDir("graft_soak_autocompact")}/$tag"
     val path = s"$root/index"
-    Similarity.writeIvfIndex(Similarity.buildIvfIndex(corpus, nlist = 64),
-      path)
+    // the fragmented start a long ingest leaves ([[annCompactRun]]'s
+    // set-up): build on the first fifth, then four frozen-center appends
+    // of a fifth each. Every write lands one file per cell, so the corpus
+    // starts at 5 writes × 64 cells = 320 files at any core count —
+    // above the ceiling whatever the writers' task geometry. All ids stay
+    // below corpusVecs, so the integrity check counts stream rows only.
+    val slice = corpusVecs / 5
+    Similarity.writeIvfIndex(
+      Similarity.buildIvfIndex(synthVecs(spark, 0, slice), nlist = 64), path)
+    (1 until 5).foreach { b =>
+      Similarity.appendToIvfIndex(synthVecs(spark, b * slice, (b + 1) * slice),
+        path)
+    }
     val vecStream = spark.readStream.format("rate")
       .option("rowsPerSecond", vecsRate.toString).load()
       .select((col("value") + corpusVecs).as("vec_id"),
@@ -688,18 +703,25 @@ object Soak {
       .select((col("value") + 2L * corpusVecs).as("vec_id"),
         expr("transform(sequence(0, 63), j -> cast(pmod((value + 11) * 43 + j * 17, 997) / 997.0 as float))")
           .as("embedding"))
-    // ceiling at 4× the 64-cell compacted floor: the fragmented BUILD
-    // (tasks × cells files — ~256 at the 4-core test geometry, ~2048 at
-    // the 32-core box) crosses it at BOTH geometries, so the first
-    // trigger always compacts, and steady-state appends (≤64 files each)
-    // re-cross every ~4 triggers — a routine maintenance cadence. Both
-    // neighbors were measured and rejected: 3× rewrote every other
+    // ceiling at 4× the 64-cell compacted floor: the fragmented start
+    // (writes × cells = 320 files) crosses it at every geometry, so the
+    // first trigger always compacts, and steady-state appends (≤64 files
+    // each) re-cross every ~4 triggers — a routine maintenance cadence.
+    // Both neighbors were measured and rejected: 3× rewrote every other
     // trigger and pushed 32-core ingest under offered (0.88×); 8× sat
-    // above the 4-core build count and never fired there.
+    // above the 4-core build's file count (measured before index writes
+    // clustered by cell) and never fired there.
+    val ceiling = 256L
+    val startFiles =
+      graft.util.Compaction.dataFileCount(spark, s"$path/corpus")
+    require(startFiles > ceiling,
+      s"auto-compaction soak: the fragmented start holds $startFiles " +
+        s"corpus files, not above the $ceiling-file ceiling — the first " +
+        "trigger cannot compact (did a writer's file layout change?)")
     val monitor = AnnStream.prepareRetrainMonitor(spark, path,
       healthFloorMicros = Long.MinValue, minVecsForAlarm = 0L,
       stateDir = Some(s"$root/monitor_state"),
-      autoCompactMaxFiles = Some(256L))
+      autoCompactMaxFiles = Some(ceiling))
     var folded = 0L // foreachBatch runs serially on the stream thread
     val iq = AnnStream.autoRetrainIngestQuery(vecStream, monitor) {
       (row, _) => folded += row.agg(sum(col("batch_vecs"))).head().getLong(0)
