@@ -79,9 +79,9 @@ object Soak {
     concat_ws(" ",
       (0 until 12).map(i => pmod(seed * (31 + i) + i + 1, lit(9973)).cast("string")): _*)
 
-  /** The synthetic 64-d corpus vectors with ids in [lo, hi) — slices of one
-    * corpus, for soaks that build an index and then fragment it with
-    * appends. */
+  /** The soaks' synthetic 64-d corpus vectors with ids in [lo, hi), from
+    * integer hashing — deterministic, so disjoint id ranges are slices of
+    * one corpus (a build plus fragmenting appends). */
   private def synthVecs(spark: SparkSession, lo: Int, hi: Int) =
     spark.range(lo.toLong, hi.toLong)
       .select(col("id").as("vec_id"),
@@ -301,10 +301,7 @@ object Soak {
   def annRun(spark: SparkSession, corpusVecs: Int, queriesRate: Int,
       tag: String, soakMs: Long = 20000): Result = {
     import graft.operators.Similarity
-    val corpus = spark.range(corpusVecs.toLong)
-      .select(col("id").as("vec_id"),
-        expr("transform(sequence(0, 63), j -> cast(pmod(id * 31 + j * 17, 997) / 997.0 as float))")
-          .as("embedding"))
+    val corpus = synthVecs(spark, 0, corpusVecs)
     val path =
       s"${graft.util.TmpDirs.perProcessDir("graft_soak_annidx")}/$tag"
     Similarity.writeIvfIndex(Similarity.buildIvfIndex(corpus, nlist = 64), path)
@@ -431,10 +428,7 @@ object Soak {
   def annIngestRestartRun(spark: SparkSession, corpusVecs: Int,
       vecsRate: Int, tag: String, soakMs: Long = 20000): Result = {
     import graft.operators.Similarity
-    val corpus = spark.range(corpusVecs.toLong)
-      .select(col("id").as("vec_id"),
-        expr("transform(sequence(0, 63), j -> cast(pmod(id * 31 + j * 17, 997) / 997.0 as float))")
-          .as("embedding"))
+    val corpus = synthVecs(spark, 0, corpusVecs)
     val root =
       s"${graft.util.TmpDirs.perProcessDir("graft_soak_ingestrestart")}/$tag"
     val path = s"$root/index"
@@ -495,10 +489,7 @@ object Soak {
   def pqRun(spark: SparkSession, corpusVecs: Int, queriesRate: Int,
       tag: String, soakMs: Long = 20000): Result = {
     import graft.operators.Pq
-    val corpus = spark.range(corpusVecs.toLong)
-      .select(col("id").as("vec_id"),
-        expr("transform(sequence(0, 63), j -> cast(pmod(id * 31 + j * 17, 997) / 997.0 as float))")
-          .as("embedding"))
+    val corpus = synthVecs(spark, 0, corpusVecs)
     val path =
       s"${graft.util.TmpDirs.perProcessDir("graft_soak_pqidx")}/$tag"
     Pq.writePqIndex(corpus, Pq.train(corpus), path)
@@ -530,10 +521,7 @@ object Soak {
     // warm-up can't fully absorb; enough steady-state batches make the
     // row a sustained number instead of one warmup-dominated mean
     import graft.operators.{Pq, Similarity}
-    val corpus = spark.range(corpusVecs.toLong)
-      .select(col("id").as("vec_id"),
-        expr("transform(sequence(0, 63), j -> cast(pmod(id * 31 + j * 17, 997) / 997.0 as float))")
-          .as("embedding"))
+    val corpus = synthVecs(spark, 0, corpusVecs)
     val path =
       s"${graft.util.TmpDirs.perProcessDir("graft_soak_ivfpqidx")}/$tag"
     // nlist=16: the ivf_pq_topk batch entry's geometry. At this corpus
@@ -565,10 +553,7 @@ object Soak {
   def ivfPqResidualRun(spark: SparkSession, corpusVecs: Int,
       queriesRate: Int, tag: String, soakMs: Long = 30000): Result = {
     import graft.operators.{Pq, Similarity}
-    val corpus = spark.range(corpusVecs.toLong)
-      .select(col("id").as("vec_id"),
-        expr("transform(sequence(0, 63), j -> cast(pmod(id * 31 + j * 17, 997) / 997.0 as float))")
-          .as("embedding"))
+    val corpus = synthVecs(spark, 0, corpusVecs)
     val path =
       s"${graft.util.TmpDirs.perProcessDir("graft_soak_ivfpqres")}/$tag"
     val index = Similarity.buildIvfIndex(corpus, nlist = 16)
@@ -631,10 +616,7 @@ object Soak {
     import graft.operators.{Bm25, Similarity}
     val corpus = spark.range(corpusDocs.toLong)
       .select(col("id").as("doc_id"), synthText(col("id")).as("text"))
-    val emb = spark.range(corpusDocs.toLong)
-      .select(col("id").as("vec_id"),
-        expr("transform(sequence(0, 63), j -> cast(pmod(id * 31 + j * 17, 997) / 997.0 as float))")
-          .as("embedding"))
+    val emb = synthVecs(spark, 0, corpusDocs)
     val lexPath =
       s"${graft.util.TmpDirs.perProcessDir("graft_soak_hyblex")}/$tag"
     val semPath =
@@ -664,10 +646,11 @@ object Soak {
     * the ceiling, while [[AnnStream.ivfSearchQuery]] keeps serving
     * queries through every rewrite window (per-trigger listings + the
     * retry-once contract — no re-prepare needed, centers are untouched).
-    * The index starts fragmented on purpose (one build plus four appends,
-    * more files than the ceiling), so the first trigger compacts; the
-    * ceiling (4× the 64-cell floor) then re-fires every few triggers —
-    * the routine cadence a real ingest runs at, priced here.
+    * The index starts fragmented on purpose (one build plus three appends,
+    * exactly at the ceiling), so the first non-empty trigger's append
+    * crosses it and the rewrite covers stream-appended rows under live
+    * serving; the ceiling (4× the 64-cell floor) then re-fires every few
+    * triggers — the routine cadence a real ingest runs at, priced here.
     *
     * Returns (ingest result, serving result, compactions fired). The run
     * itself REQUIRES ≥1 automatic compaction, zero duplicate appended
@@ -681,15 +664,18 @@ object Soak {
       s"${graft.util.TmpDirs.perProcessDir("graft_soak_autocompact")}/$tag"
     val path = s"$root/index"
     // the fragmented start a long ingest leaves ([[annCompactRun]]'s
-    // set-up): build on the first fifth, then four frozen-center appends
-    // of a fifth each. Every write lands one file per cell, so the corpus
-    // starts at 5 writes × 64 cells = 320 files at any core count —
-    // above the ceiling whatever the writers' task geometry. All ids stay
-    // below corpusVecs, so the integrity check counts stream rows only.
-    val slice = corpusVecs / 5
+    // set-up): build on the first quarter, then three frozen-center
+    // appends of a quarter each. Every write lands one file per cell, so
+    // the corpus starts at 4 writes × 64 cells = 256 files at any core
+    // count — at the ceiling whatever the writers' task geometry. All ids
+    // stay below corpusVecs, so the integrity check counts stream rows
+    // only.
+    val nlist = 64
+    val slice = corpusVecs / 4
     Similarity.writeIvfIndex(
-      Similarity.buildIvfIndex(synthVecs(spark, 0, slice), nlist = 64), path)
-    (1 until 5).foreach { b =>
+      Similarity.buildIvfIndex(synthVecs(spark, 0, slice), nlist = nlist),
+      path)
+    (1 until 4).foreach { b =>
       Similarity.appendToIvfIndex(synthVecs(spark, b * slice, (b + 1) * slice),
         path)
     }
@@ -704,9 +690,11 @@ object Soak {
         expr("transform(sequence(0, 63), j -> cast(pmod((value + 11) * 43 + j * 17, 997) / 997.0 as float))")
           .as("embedding"))
     // ceiling at 4× the 64-cell compacted floor: the fragmented start
-    // (writes × cells = 320 files) crosses it at every geometry, so the
-    // first trigger always compacts, and steady-state appends (≤64 files
-    // each) re-cross every ~4 triggers — a routine maintenance cadence.
+    // (writes × cells = 256 files) sits at it, so an empty trigger never
+    // compacts pre-soak rows alone, and the first non-empty append (≤64
+    // files) crosses it: the first rewrite always includes folded stream
+    // rows, which the integrity check below counts. Steady-state appends
+    // then re-cross every ~4 triggers — a routine maintenance cadence.
     // Both neighbors were measured and rejected: 3× rewrote every other
     // trigger and pushed 32-core ingest under offered (0.88×); 8× sat
     // above the 4-core build's file count (measured before index writes
@@ -714,10 +702,11 @@ object Soak {
     val ceiling = 256L
     val startFiles =
       graft.util.Compaction.dataFileCount(spark, s"$path/corpus")
-    require(startFiles > ceiling,
+    require(startFiles <= ceiling && startFiles + nlist > ceiling,
       s"auto-compaction soak: the fragmented start holds $startFiles " +
-        s"corpus files, not above the $ceiling-file ceiling — the first " +
-        "trigger cannot compact (did a writer's file layout change?)")
+        s"corpus files, outside (${ceiling - nlist}, $ceiling] — the " +
+        "first rewrite must be the first stream append's (did a writer's " +
+        "file layout change?)")
     val monitor = AnnStream.prepareRetrainMonitor(spark, path,
       healthFloorMicros = Long.MinValue, minVecsForAlarm = 0L,
       stateDir = Some(s"$root/monitor_state"),
