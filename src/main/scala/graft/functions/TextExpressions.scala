@@ -739,8 +739,10 @@ object TextExpressions {
     wrap(SetIntersectSizeExpr(expr(a), expr(b)))
 
   /** |A∩B| by linear merge — BOTH inputs must come from the *Sorted
-    * producers below (see [[SetOpsImpl.sortedIntersectSize]]). */
-  def sortedIntersectSize(a: Column, b: Column): Column =
+    * producers below (see [[SetOpsImpl.sortedIntersectSize]]). The merge
+    * undercounts on unsorted input and checks nothing, so the column stays
+    * inside the engine, for the verify sites that build both sides. */
+  private[graft] def sortedIntersectSize(a: Column, b: Column): Column =
     wrap(SortedIntersectSizeExpr(expr(a), expr(b)))
 
   /** Distinct character shingles of a string column (codegen'd). */

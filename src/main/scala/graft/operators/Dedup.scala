@@ -799,22 +799,6 @@ object Dedup {
     graft.util.Tombstones.clearFiles(spark, tsRoot, snapshot)
   }
 
-  /** Re-hash the standing corpus's exact index (shingleLen / cap retune —
-    * an append-time cap drifts conservatively, a rebuild re-applies it
-    * cleanly) and swap — same protocol. */
-  def rebuildExactIndex(docs: DataFrame, table: String, shingleLen: Int = 5,
-      buckets: Int = 32, maxBucketSize: Int = 1000): Unit = {
-    val spark = docs.sparkSession
-    val tsRoot = indexTombstoneRoot(spark, table)
-    val snapshot = graft.util.Tombstones.dataFiles(spark, tsRoot)
-    val retained = foldTombstoneSnapshot(docs, snapshot, "doc_id")
-    rebuildIndexTable(spark, table) { (stagingTable, loc) =>
-      writeExactIndex(retained, stagingTable, shingleLen, buckets,
-        maxBucketSize, location = Some(loc))
-    }
-    graft.util.Tombstones.clearFiles(spark, tsRoot, snapshot)
-  }
-
   /** Re-chunk the standing perceptual-hash index at a new `numChunks`
     * (the Hamming-budget pigeonhole dial) and swap — same protocol; the
     * chunk-geometry table property rides the staging table through the

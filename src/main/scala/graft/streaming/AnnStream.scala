@@ -911,26 +911,6 @@ object AnnStream {
     m
   }
 
-  /** The SQ8 tier's COMPOSED ops loop — ingest → grid-distortion alarm →
-    * grid retrain — completing the 4× tier's lifecycle
-    * ([[autoRetrainPqIngestQuery]]'s twin; the shared [[DriftMonitor]]
-    * scaffold IS the durability/replay implementation). Monitor rows to
-    * `sink`, one per delivered batch: (batch_id, batch_vecs, total_vecs,
-    * mean_err_micros, alarm, retrained). A standing [[sqSearchQuery]]
-    * serving the same index follows a fired retrain via its params
-    * signature check with no restart (SqAutoRetrainSpec pins the
-    * lifecycle). */
-  def autoRetrainSqIngestQuery(vecStream: DataFrame,
-      monitor: SqRetrainMonitor)
-      (sink: (DataFrame, Long) => Unit): DataStreamWriter[Row] = {
-    monitor.foldedThisIncarnation = false // see autoRetrainIngestQuery
-    vecStream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processSqIngestBatch(monitor, batch, batchId)(sink)
-      }
-  }
-
   /** One SQ8 auto-retrain micro-batch — [[processDriftIngestBatch]] with
     * the SQ monitor's bindings, kept as the directly-testable entry. */
   private[graft] def processSqIngestBatch(monitor: SqRetrainMonitor,

@@ -6,7 +6,7 @@ import org.apache.spark.sql.SparkSession
 
 /** Scale-adaptive session tuning, derived ONCE per (session, data dir) from
   * the input's measured size — never a local[k] constant (guide §1.2 step 3,
-  * §2.2; OPTIMIZATION_r18.md).
+  * §2.2).
   *
   * `spark.sql.shuffle.partitions` is derived as max(parallelism, B/A) for
   * input bytes B and the AQE advisory partition size A (§2.2: partitions
@@ -19,7 +19,7 @@ import org.apache.spark.sql.SparkSession
   * a local constant.
   *
   * AQE itself is deliberately left ON and untouched. A measured dead end
-  * from this round (OPTIMIZATION_r18.md): gating
+  * from round 18 (recorded in VERDICT.md, theme C): gating
   * `spark.sql.adaptive.enabled` off below the size where coalescing/skew
   * levers can engage — rationalized as removing per-stage re-planning jobs
   * (~8 jobs/entry across the bench) — REGRESSED the full 213-entry bench

@@ -499,12 +499,19 @@ class DedupSpec extends SparkTestBase {
       .filter(length($"t") >= 5)
     // brute force: UNBOUNDED levenshtein over all pairs, the exact-integer
     // threshold criterion (d·10000 ≤ 2000·max_len) — the candidate stage
-    // and the −1 bound must drop nothing this filter keeps
-    val brute = base.as("a").join(base.as("b"), col("a.doc_id") < col("b.doc_id"))
+    // and the −1 bound must drop nothing this filter keeps. The length
+    // bound |la − lb|·10000 ≤ 2000·max_len drops only pairs that cannot pass
+    // it (levenshtein ≥ |la − lb|), so the expected set is the same as over
+    // all pairs. The filter lands in the join condition in this conjunct
+    // order; a separate join condition would be placed after the pushed
+    // criterion, and levenshtein would run on every ordered pair
+    val (la, lb) = (length(col("a.t")), length(col("b.t")))
+    val brute = base.as("a").crossJoin(base.as("b"))
       .select(col("a.doc_id").as("a_doc_id"), col("b.doc_id").as("b_doc_id"),
         levenshtein(col("a.t"), col("b.t")).as("d"),
-        greatest(length(col("a.t")), length(col("b.t"))).as("ml"))
-      .filter($"d" * 10000 <= $"ml" * 2000)
+        greatest(la, lb).as("ml"), abs(la - lb).as("dl"))
+      .filter($"a_doc_id" < $"b_doc_id" && $"dl" * 10000 <= $"ml" * 2000 &&
+        $"d" * 10000 <= $"ml" * 2000)
       .select($"a_doc_id", $"b_doc_id", $"d".cast("long"),
         round(lit(1.0) - $"d".cast("double") / $"ml", 4))
       .as[(Long, Long, Long, Double)].collect().toSet

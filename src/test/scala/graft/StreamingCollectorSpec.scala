@@ -2,7 +2,10 @@ package graft
 
 import java.nio.file.{Files, Path}
 import java.sql.Timestamp
+import java.util.concurrent.atomic.AtomicInteger
 
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 import graft.streaming.{FileTweetSource, StreamingCollector}
@@ -110,5 +113,66 @@ class StreamingCollectorSpec extends SparkTestBase {
     assert(lines.size == 3) // f1 not re-emitted: only the new file's row added
     assert(c2.collected == 1) // restart processed exactly the delta
     assert(lines.count(_.startsWith("un #Macron")) == 1)
+  }
+
+  test("a batch whose rows are all filtered out leaves no directory and adds 0") {
+    val out = tmp("collector-empty")
+    val ms = MemoryStream[TweetStatus]
+    val collector = new StreamingCollector(out.toString, Long.MaxValue)
+    val q = collector.start(ms.toDF())
+    ms.addData(rejected) // batch 0: every row dropped by the filters
+    q.processAllAvailable()
+    assert(collector.collected == 0)
+    assert(!Files.exists(out.resolve("batch_0")))
+
+    ms.addData(french) // batch 1: kept rows still land in their own directory
+    q.processAllAvailable()
+    q.stop()
+    assert(collector.collected == 3)
+    assert(!Files.exists(out.resolve("batch_0")))
+    assert(readLines(out).size == 3)
+  }
+
+  test("a batch with more partitions than `partitions` lands exactly that many files") {
+    val out = tmp("collector-wide")
+    val many = (1 to 40).map(i => TweetStatus(s"vote #Macron $i", TweetUser("fr"),
+      None, ts("2017-04-23 10:12:00")))
+    val ms = MemoryStream[TweetStatus](8) // one batch, 8 input partitions
+    val collector = new StreamingCollector(out.toString, Long.MaxValue, partitions = 2)
+    val q = collector.start(ms.toDF())
+    ms.addData(many ++ rejected)
+    q.processAllAvailable()
+    q.stop()
+
+    val parts = out.resolve("batch_0").toFile.listFiles().count(_.getName.startsWith("part-"))
+    assert(parts == 2)
+    val batch = StreamingCollector.pipeline(
+      (many ++ rejected).toDF()).as[String].collect().toSeq.sorted
+    assert(readLines(out) == batch)
+    assert(collector.collected == 40)
+  }
+
+  test("a non-empty single-partition trigger runs exactly one Spark job") {
+    val ms = MemoryStream[TweetStatus]
+    val collector = new StreamingCollector(tmp("collector-jobs").toString, Long.MaxValue)
+    val q = collector.start(ms.toDF())
+    val sc = spark.sparkContext
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    q.processAllAvailable()
+    ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    try {
+      ms.addData(french ++ rejected) // one block: a one-partition batch
+      q.processAllAvailable()
+      ListenerBusDrain(sc)
+    } finally {
+      sc.removeSparkListener(listener)
+      q.stop()
+    }
+    assert(collector.collected == 3)
+    assert(jobs.get == 1) // the write; the count rides on it
   }
 }
